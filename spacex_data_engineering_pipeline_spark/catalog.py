@@ -18,6 +18,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from spacex_data_engineering_pipeline_spark.session import read_parquet
+
 TABLES = (
     "region",
     "nation",
@@ -54,7 +56,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         prev = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", None)
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         try:
-            df = spark.read.parquet(path)
+            df = read_parquet(spark, path)
             # force analysis while the conf is set: dtypes resolves the
             # schema here; the scan itself re-reads footers lazily, so
             # the ts column must be captured as bigint NOW
@@ -79,7 +81,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
                 ),
             )
         return df
-    return spark.read.parquet(path)
+    return read_parquet(spark, path)
 
 
 def load_tables(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict[str, DataFrame]:

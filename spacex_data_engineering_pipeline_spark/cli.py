@@ -22,7 +22,7 @@ import json
 import os
 import sys
 
-from spacex_data_engineering_pipeline_spark.session import get_spark
+from spacex_data_engineering_pipeline_spark.session import get_spark, read_parquet
 
 
 def _warehouse_paths(warehouse: str) -> dict[str, str]:
@@ -42,7 +42,7 @@ def cmd_ingest(args: argparse.Namespace) -> int:
     spark = get_spark(app_name="ingest-cli")
     spark.sparkContext.setLogLevel("ERROR")
     source = LocalLaunchSource.from_parquet(spark, args.source_parquet)
-    payloads = spark.read.parquet(args.payloads_parquet)
+    payloads = read_parquet(spark, args.payloads_parquet)
     pipeline = IncrementalIngestionPipeline(
         spark, source, payloads,
         partition_by_year=args.partition_by_year,
@@ -92,7 +92,7 @@ def cmd_corpus(args: argparse.Namespace) -> int:
 
     spark = get_spark(app_name="corpus-cli")
     spark.sparkContext.setLogLevel("ERROR")
-    docs = spark.read.parquet(args.documents_parquet)
+    docs = read_parquet(spark, args.documents_parquet)
     scrubbed, counts = scrub_pii(F.col("text"))
     prepared = docs.withColumn("text", scrubbed).withColumn(
         "quality_score", quality_score(F.col("text"))
@@ -106,7 +106,7 @@ def cmd_corpus(args: argparse.Namespace) -> int:
     clean = exact_dedup(gated, ["text"], [F.col("doc_id").asc()])
     clean_path = os.path.join(args.out, "clean")
     clean.write.mode("overwrite").parquet(clean_path)
-    out = spark.read.parquet(clean_path)
+    out = read_parquet(spark, clean_path)
     stats = {
         "input_docs": docs.count(),
         "kept_docs": out.count(),
@@ -171,7 +171,7 @@ def cmd_checksum(args: argparse.Namespace) -> int:
 
     spark = get_spark(app_name="checksum-cli")
     spark.sparkContext.setLogLevel("ERROR")
-    df = spark.read.parquet(args.table_path)
+    df = read_parquet(spark, args.table_path)
     cols = args.columns.split(",")
     canonical = F.concat_ws("|", *[F.col(c).cast("string") for c in cols])
     if args.partition_col:
@@ -205,7 +205,7 @@ def cmd_repair(args: argparse.Namespace) -> int:
 
     spark = get_spark(app_name="repair-cli")
     spark.sparkContext.setLogLevel("ERROR")
-    source = spark.read.parquet(args.source_path)
+    source = read_parquet(spark, args.source_path)
     cols = args.columns.split(",")
     canonical = F.concat_ws("|", *[F.col(c).cast("string") for c in cols])
     out = repair_table(

@@ -24,6 +24,8 @@ import shutil
 
 from pyspark.sql import SparkSession
 
+from spacex_data_engineering_pipeline_spark.session import read_parquet
+
 
 _TMP_PREFIX = "_tmp_compact_"
 _OLD_PREFIX = "_old_compact_"
@@ -147,7 +149,7 @@ def compact_parquet(
             files_after += n
             continue
         tmp, old = _staging_paths(leaf)
-        spark.read.parquet(leaf).coalesce(int(want)).write.mode("overwrite").parquet(tmp)
+        read_parquet(spark, leaf).coalesce(int(want)).write.mode("overwrite").parquet(tmp)
         if os.path.exists(old):
             shutil.rmtree(old)
         os.replace(leaf, old)

@@ -120,7 +120,6 @@ def ngram_jaccard_pairs(
     return release_caches_with(out, grams)
 
 
-_MAX_LONG = (1 << 63) - 1
 _MINHASH_P = 2_147_483_647  # 2^31 - 1, prime — universal-hash modulus
 
 
@@ -236,60 +235,6 @@ def minhash_coeffs(num_hashes: int) -> list[tuple[int, int]]:
         )
         out.append((a, b))
     return out
-
-
-def _shingle_bases(shingles: Column) -> Column:
-    """Portable 28-bit base hash per shingle: first 7 hex digits of its
-    MD5 (``('0x'||substr(md5(s),1,7))::UBIGINT`` in DuckDB). ONE digest
-    per shingle — the k per-permutation hashes are derived from it by
-    affine arithmetic, so this is cheaper than k engine hashes AND
-    engine-independent. 28 bits keeps every downstream product
-    ``a_i·x + b_i`` (< 2^59) inside exact signed-64 arithmetic on both
-    engines."""
-    return F.transform(
-        shingles, lambda s: F.conv(F.substring(F.md5(s), 1, 7), 16, 10).cast("long")
-    )
-
-
-def _band_minhash(bases: Column, lo: int, hi: int, coeffs: list[tuple[int, int]]) -> Column:
-    """Min-hash vector for permutation indices [lo, hi) over a base-hash
-    array column: per base compute the (hi-lo) affine hashes, then fold
-    with an element-wise ``least`` — the base array is referenced
-    exactly once, so optimizer inlining can't multiply the work (see
-    functions/text.py ``ngrams_from_words`` for the full story).
-    """
-    per_shingle = F.transform(
-        bases,
-        lambda h: F.array(
-            *[
-                F.pmod(h * F.lit(a) + F.lit(b), F.lit(_MINHASH_P))
-                for a, b in coeffs[lo:hi]
-            ]
-        ),
-    )
-    init = F.array_repeat(F.lit(_MAX_LONG), hi - lo)
-    return F.aggregate(
-        per_shingle, init, lambda acc, hs: F.zip_with(acc, hs, lambda a, b: F.least(a, b))
-    )
-
-
-def minhash_signatures(
-    df: DataFrame, id_col: str, text_col: str, num_hashes: int = 64, shingle_n: int = 3
-) -> DataFrame:
-    """MinHash signature per document: k independent min-hashes of the
-    word-shingle set via the portable MD5-seeded affine family — all
-    native expressions, one narrow map stage, one MD5 per shingle plus
-    O(shingles·k) integer arithmetic per row.
-    """
-    coeffs = minhash_coeffs(num_hashes)
-    return (
-        with_word_ngrams(_spread(df), text_col, shingle_n, out_col="shingles", distinct=True)
-        .select(F.col(id_col).alias("doc"), "shingles")
-        .filter(F.size("shingles") > 0)
-        .withColumn(
-            "sig", _band_minhash(_shingle_bases(F.col("shingles")), 0, num_hashes, coeffs)
-        )
-    )
 
 
 def _minhash_band_hashes_udf(num_hashes: int, bands: int):

@@ -35,6 +35,7 @@ from spacex_data_engineering_pipeline_spark.operators.upsert import (
     _repair_partition_swaps,
     _swap_in_partitions,
 )
+from spacex_data_engineering_pipeline_spark.session import read_parquet
 
 
 def delete_where(
@@ -63,7 +64,7 @@ def delete_where(
         old_path = table_path.rstrip("/") + "__old_delete"
         if not os.path.exists(table_path) and os.path.exists(old_path):
             os.replace(old_path, table_path)  # crash repair, upsert-style
-        existing = spark.read.parquet(table_path)
+        existing = read_parquet(spark, table_path)
         obs = Observation()
         deleted_expr = F.sum(
             F.when(F.coalesce(predicate, F.lit(False)), 1).otherwise(0)
@@ -79,7 +80,7 @@ def delete_where(
         return int(obs.get["deleted"] or 0)
 
     _repair_partition_swaps(table_path)
-    existing = spark.read.parquet(table_path)
+    existing = read_parquet(spark, table_path)
     # Probe: affected partition values + per-partition match counts in
     # ONE partition-prunable job (only partition_col and the predicate's
     # columns are read).

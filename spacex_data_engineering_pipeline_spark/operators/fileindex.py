@@ -43,6 +43,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from spacex_data_engineering_pipeline_spark.session import read_parquet
+
 INDEX_SCHEMA = (
     "file string, column string, min_val double, max_val double, "
     "n_rows bigint"
@@ -176,10 +178,10 @@ def read_pruned_df(
     for row in surviving.select("file").toLocalIterator():
         batch.append(row["file"])
         if len(batch) >= batch_size:
-            readers.append(spark.read.parquet(*batch))
+            readers.append(read_parquet(spark, *batch))
             batch = []
     if batch:
-        readers.append(spark.read.parquet(*batch))
+        readers.append(read_parquet(spark, *batch))
     if not readers:
         if schema is None:
             raise ValueError("empty file list requires an explicit schema")
@@ -196,7 +198,7 @@ def read_pruned(
     """Read exactly the surviving files. An empty survivor list needs
     a schema to produce the (empty) result frame."""
     if files:
-        return spark.read.parquet(*files)
+        return read_parquet(spark, *files)
     if schema is None:
         raise ValueError("empty file list requires an explicit schema")
     return spark.createDataFrame([], schema)

@@ -39,6 +39,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from spacex_data_engineering_pipeline_spark.operators.pq import _lloyd_kmeans
+from spacex_data_engineering_pipeline_spark.session import read_parquet
 
 
 class IvfPqIndex:
@@ -99,7 +100,7 @@ def load_ivfpq_index(spark, path: str) -> IvfPqIndex:
 
     with open(os.path.join(path, "quantizers.json")) as f:
         q = json.load(f)
-    postings = spark.read.parquet(os.path.join(path, "postings"))
+    postings = read_parquet(spark, os.path.join(path, "postings"))
     return IvfPqIndex(
         postings,
         np.asarray(q["centroids"], dtype="float64"),

@@ -51,6 +51,8 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from spacex_data_engineering_pipeline_spark.session import read_parquet
+
 _BUCKET = "__bucket"
 _ROWS = "__rows"
 _POINTER = "_current.json"
@@ -193,7 +195,7 @@ def apply_delta(
         return {"applied": True, "gen": ptr["gen"], "touched_buckets": 0}
     assert all(isinstance(b, int) for b in touched)
 
-    view = spark.read.parquet(cur).filter(F.col(_BUCKET).isin(touched))
+    view = read_parquet(spark, cur).filter(F.col(_BUCKET).isin(touched))
     measure_cols = [_ROWS, *measures.keys()]
     cond = None
     for c in group_cols:
@@ -252,7 +254,7 @@ def read_matview(
         raise FileNotFoundError(
             f"generation {gen} not on disk (garbage-collected or never written)"
         )
-    df = spark.read.parquet(gdir)
+    df = read_parquet(spark, gdir)
     out = df.drop(_BUCKET, _ROWS)
     if avg_of:
         for out_col, (s, c) in avg_of.items():

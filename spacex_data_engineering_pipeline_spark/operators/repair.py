@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from spacex_data_engineering_pipeline_spark.session import read_parquet
+
 
 def partition_checksums(
     df: DataFrame, partition_col: str, canonical: Column
@@ -76,7 +78,7 @@ def repair_table(
     import shutil
 
     _repair_partition_swaps(target_path)
-    target = spark.read.parquet(target_path)
+    target = read_parquet(spark, target_path)
     bad = diverged_partitions(source, target, partition_col, canonical)
     if not bad:
         return {"diverged": [], "rewritten": 0}

@@ -153,10 +153,3 @@ def weight_proportional_sample(
     lhs = hash_coin(F.col(key_col), salt) * F.lit(max_weight * rate_den)
     rhs = w * F.lit(_SCALE * rate_num)
     return df.filter(lhs < rhs)
-
-
-def oracle_coin_sql(key_expr: str, salt: str) -> str:
-    """DuckDB expression replaying :func:`hash_coin` bit-for-bit."""
-    return (
-        f"CAST(('0x' || substr(md5({key_expr} || ':{salt}'), 1, 8)) AS UBIGINT)"
-    )

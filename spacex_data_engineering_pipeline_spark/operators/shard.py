@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from spacex_data_engineering_pipeline_spark.session import read_parquet
+
 
 def with_shard(df: DataFrame, id_col: str, n_shards: int) -> DataFrame:
     """Append the deterministic ``shard`` column (pmod of the stable id,
@@ -47,4 +49,4 @@ def read_shard(spark: SparkSession, path: str, shard: int) -> DataFrame:
     """One shard back, partition-pruned at scan time (the point of the
     directory layout: a worker reads 1/N of the corpus, not a filter
     over all of it)."""
-    return spark.read.parquet(path).filter(F.col("shard") == shard)
+    return read_parquet(spark, path).filter(F.col("shard") == shard)

@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 
 from spacex_data_engineering_pipeline_spark.functions.vectors import cosine, cosine_arrow, dot
 from spacex_data_engineering_pipeline_spark.operators.util import release_caches_with
+from spacex_data_engineering_pipeline_spark.session import read_parquet
 
 
 def grouped_allpairs_cosine(
@@ -504,7 +505,7 @@ def load_knn_graph(spark, path: str) -> DataFrame:
     schema (a graph saved under a different id column fails fast here
     instead of mis-joining downstream)."""
     meta = load_knn_graph_meta(spark, path)
-    edges = spark.read.parquet(path + "/edges")
+    edges = read_parquet(spark, path + "/edges")
     if meta["id_col"] not in edges.columns:
         raise ValueError(
             f"saved kNN graph at {path} declares id_col={meta['id_col']!r} "
@@ -520,7 +521,7 @@ def knn_graph_neighbors(spark, path: str, id_value: int) -> DataFrame:
     file-listing time (the access pattern the bucketed layout exists
     for; at 100 TB this touches 1/n_buckets of the files)."""
     meta = load_knn_graph_meta(spark, path)
-    edges = spark.read.parquet(path + "/edges")
+    edges = read_parquet(spark, path + "/edges")
     id_col = meta["id_col"]
     bucket = (
         edges.sparkSession.range(1)
@@ -2342,7 +2343,7 @@ def load_ivf_index(spark, path: str, id_col: str, vec_col: str) -> IvfIndex:
 
     with open(os.path.join(path, "centroids.json")) as f:
         centroids = json.load(f)
-    assigned = spark.read.parquet(os.path.join(path, "postings"))
+    assigned = read_parquet(spark, os.path.join(path, "postings"))
     return IvfIndex(assigned, centroids, id_col, vec_col)
 
 

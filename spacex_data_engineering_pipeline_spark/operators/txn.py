@@ -38,6 +38,8 @@ import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 
+from spacex_data_engineering_pipeline_spark.session import read_parquet
+
 _POINTER = "_txn_pointer.json"
 
 
@@ -169,7 +171,7 @@ def read_table(
     if name not in ptr["tables"]:
         raise KeyError(f"table {name!r} not committed in this root")
     gen = ptr["tables"][name]
-    return spark.read.parquet(os.path.join(root, name, f"gen={gen}"))
+    return read_parquet(spark, os.path.join(root, name, f"gen={gen}"))
 
 
 def vacuum(root: str, keep_last: int = 1) -> int:

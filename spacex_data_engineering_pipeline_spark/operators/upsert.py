@@ -26,6 +26,8 @@ import shutil
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from spacex_data_engineering_pipeline_spark.session import read_parquet
+
 
 _OLD_PART_PREFIX = "_old_part_"
 
@@ -178,7 +180,7 @@ def upsert_parquet(
         os.replace(old_path, table_path)
 
     exists = os.path.exists(table_path)
-    existing = spark.read.parquet(table_path) if exists else None
+    existing = read_parquet(spark, table_path) if exists else None
     keyed = (probe if probe is not None else incoming).select(key).distinct()
     if exists:
         # new-key count via anti-join probe, NOT count-before/count-after
@@ -287,7 +289,7 @@ def upsert_parquet_partitioned(
         ).write.partitionBy(partition_col).mode("overwrite").parquet(table_path)
         return int(obs.get["rows"])
 
-    existing = spark.read.parquet(table_path)
+    existing = read_parquet(spark, table_path)
 
     # Batch-bounded probe jobs replace the old four table-sized ones
     # (count-before, affected-partition collect, count-after ×2 scans):

@@ -37,6 +37,7 @@ from spacex_data_engineering_pipeline_spark.plans.aggregations import (
     AggregationService,
     new_run_id,
 )
+from spacex_data_engineering_pipeline_spark.session import read_parquet
 from spacex_data_engineering_pipeline_spark.sources.launches import (
     LaunchSource,
     enrich_with_payload_mass,
@@ -81,7 +82,7 @@ class IncrementalIngestionPipeline:
         return os.path.exists(self.launches_path)
 
     def launches(self) -> DataFrame:
-        return self.spark.read.parquet(self.launches_path)
+        return read_parquet(self.spark, self.launches_path)
 
     def _read_state(self) -> tuple[datetime, int]:
         """Watermark (freshest row by (updated_at, id)) + max id in one

@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 
 from spacex_data_engineering_pipeline_spark.pipeline import metalog
 from spacex_data_engineering_pipeline_spark.schemas import LAUNCH_AGGREGATIONS_SCHEMA
+from spacex_data_engineering_pipeline_spark.session import read_parquet
 
 SNAPSHOT_TYPES = ("initial", "incremental", "manual")
 
@@ -100,7 +101,7 @@ class AggregationService:
     def snapshots(self) -> DataFrame:
         if not self._exists():
             return self.spark.createDataFrame([], LAUNCH_AGGREGATIONS_SCHEMA)
-        return self.spark.read.parquet(self.path)
+        return read_parquet(self.spark, self.path, schema=LAUNCH_AGGREGATIONS_SCHEMA)
 
     def append_snapshot(
         self,

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from spacex_data_engineering_pipeline_spark.catalog import load_table
+from spacex_data_engineering_pipeline_spark.session import read_parquet
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -5140,7 +5141,7 @@ def streaming_dedup_against_index(spark: SparkSession, sf_dir: str) -> DataFrame
     finally:
         grams.unpersist()
         banded.unpersist()
-    return spark.read.parquet(out).select("new_doc", "corpus_doc", "jaccard_micro")
+    return read_parquet(spark, out).select("new_doc", "corpus_doc", "jaccard_micro")
 
 
 # ===========================================================================
@@ -10528,7 +10529,7 @@ def zorder_box_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     path = _tempfile.mkdtemp(prefix="zorder_") + "/lineitem"
     write_zordered(li, path, ["l_partkey", "l_suppkey"], n_files=16)
-    back = spark.read.parquet(path)
+    back = read_parquet(spark, path)
     return back.filter(
         F.col("l_partkey").between(200, 400) & F.col("l_suppkey").between(20, 60)
     ).agg(
@@ -12122,7 +12123,7 @@ def retention_delete_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         "1998-01-01 00:00:00",
         partition_col="year",
     )
-    back = spark.read.parquet(path)
+    back = read_parquet(spark, path)
     return back.groupBy(F.col("year").cast("bigint").alias("year")).agg(
         F.count(F.lit(1)).alias("n_orders"),
         F.round(F.sum("o_totalprice"), 2).alias("revenue"),
@@ -12180,7 +12181,7 @@ def upsert_merge_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         .unionByName(orders.filter(F.col("o_orderkey") % 2 == 1))
     )
     upsert_parquet(spark, path, batch, key="o_orderkey", order_by=None)
-    back = spark.read.parquet(path)
+    back = read_parquet(spark, path)
     return back.groupBy("o_orderstatus").agg(
         F.count(F.lit(1)).alias("n_orders"),
         F.round(F.sum("o_totalprice"), 2).alias("revenue"),

@@ -13,10 +13,14 @@ Design notes (100 TB posture):
 
 from __future__ import annotations
 
+import json
 import os
 import tempfile
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
@@ -103,6 +107,91 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+# Footer key under which Spark's parquet writer stores the exact
+# StructType of the rows it wrote (ParquetReadSupport.SPARK_METADATA_KEY).
+SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _listed(name: str) -> bool:
+    """Whether Spark's file listing keeps a file or dir name
+    (InMemoryFileIndex.shouldFilterOutPathName): hidden ``.`` names and
+    ``_`` names are skipped, except partition dirs such as
+    ``__bucket=3`` whose ``_`` name holds an ``=``."""
+    return not (
+        name.startswith(".")
+        or (name.startswith("_") and "=" not in name)
+        or name.endswith("._COPYING_")
+    )
+
+
+def _first_data_file(path: str) -> str | None:
+    """One data file of a local parquet path (a file or a table dir),
+    visited in name order, or None when the listing holds none."""
+    if os.path.isfile(path):
+        return path
+    for dirpath, dirnames, filenames in os.walk(path):
+        dirnames[:] = sorted(d for d in dirnames if _listed(d))
+        for name in sorted(filenames):
+            if _listed(name):
+                return os.path.join(dirpath, name)
+    return None
+
+
+def _footer_schema(path: str) -> StructType | None:
+    """The data schema Spark stored in the footer of one data file of
+    ``path``, or None when there is none to take: no data file, the
+    file vanished or is not parquet, no Spark key (pyarrow- or
+    DuckDB-written), or a data column that is also a partition column
+    of the dir layout (Spark would keep it in its data position)."""
+    f = _first_data_file(path)
+    if f is None:
+        return None
+    try:
+        raw = (pq.read_metadata(f).metadata or {}).get(SPARK_SCHEMA_KEY)
+    except (OSError, pa.ArrowInvalid):
+        return None
+    if raw is None:
+        return None
+    try:
+        schema = StructType.fromJson(json.loads(raw))
+    except (ValueError, KeyError, TypeError):  # a legacy, non-JSON schema string
+        return None
+    part_cols = {
+        seg.split("=", 1)[0].lower()
+        for seg in os.path.dirname(os.path.relpath(f, path)).split(os.sep)
+        if "=" in seg
+    }
+    if part_cols & {n.lower() for n in schema.fieldNames()}:
+        return None
+    return schema
+
+
+def read_parquet(
+    spark: SparkSession, *paths: str, schema: StructType | None = None
+) -> DataFrame:
+    """``spark.read.parquet(*paths)`` without the schema-inference job.
+
+    Plain ``spark.read.parquet`` submits one Spark job per call that
+    reads a footer to infer the schema. Tables written by Spark carry
+    that exact schema in every part file's footer, so the driver reads
+    one footer of the first path with pyarrow (the file Spark's listing
+    would keep, the same one-footer rule Spark's non-merging inference
+    follows) and hands the schema to the reader. Partition columns are
+    still discovered and typed from the directory names.
+
+    ``schema`` declares the data schema outright (driver-written
+    tables whose writer knows it). Without it, anything the footer
+    cannot answer -- no Spark key, an empty dir, a file removed by a
+    concurrent vacuum, a non-local path -- falls back to the plain
+    read, with its inference job and its errors.
+    """
+    if schema is None and paths and os.path.exists(paths[0]):
+        schema = _footer_schema(paths[0])
+    if schema is None:
+        return spark.read.parquet(*paths)
+    return spark.read.schema(schema).parquet(*paths)
 
 
 # Streaming state-partition knees, measured at sf0.1 (SCALE_NOTES r5/r8

@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from spacex_data_engineering_pipeline_spark.schemas import LAUNCHES_SCHEMA
+from spacex_data_engineering_pipeline_spark.session import read_parquet
 
 # raw (pre-validation) launch shape: ISO-8601 strings with Z, as the API
 # returns them (reference src/models.py:35-66 parses these per-row)
@@ -175,7 +176,7 @@ class LocalLaunchSource:
 
     @classmethod
     def from_parquet(cls, spark: SparkSession, path: str) -> "LocalLaunchSource":
-        return cls(spark, spark.read.parquet(path))
+        return cls(spark, read_parquet(spark, path))
 
     @classmethod
     def from_orc(cls, spark: SparkSession, path: str) -> "LocalLaunchSource":

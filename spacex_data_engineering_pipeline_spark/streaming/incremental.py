@@ -33,6 +33,7 @@ from spacex_data_engineering_pipeline_spark.operators.upsert import (
     upsert_parquet_partitioned,
 )
 from spacex_data_engineering_pipeline_spark.plans.aggregations import AggregationService
+from spacex_data_engineering_pipeline_spark.session import read_parquet
 from spacex_data_engineering_pipeline_spark.sources.launches import (
     enrich_with_payload_mass,
     validate_and_conform,
@@ -129,7 +130,7 @@ def run_streaming_ingestion(
                 order_by=[F.col("ingested_at").desc()],
             )
         aggregations.append_snapshot(
-            spark.read.parquet(launches_path),
+            read_parquet(spark, launches_path),
             snapshot_type="incremental",
             launches_added_in_batch=inserted,
             run_id=f"stream_batch_{batch_id}",

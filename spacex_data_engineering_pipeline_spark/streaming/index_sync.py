@@ -109,6 +109,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from spacex_data_engineering_pipeline_spark.operators import similarity as S
+from spacex_data_engineering_pipeline_spark.session import read_parquet
 from spacex_data_engineering_pipeline_spark.streaming.ledger import (
     EpochLedger,
     compact_path as _compact_path,
@@ -234,7 +235,8 @@ def _corpus_at(spark: SparkSession, root: str, ptr: dict) -> DataFrame:
     id_col, vec_col = ptr["id_col"], ptr["vec_col"]
     gen_now = int(ptr["generation"])
     floor = int(ptr.get("corpus_rebase_gen", 0) or 0)
-    base = spark.read.parquet(
+    base = read_parquet(
+        spark,
         os.path.join(root, "corpus_rebase", f"upto={floor}")
         if floor
         else os.path.join(root, "corpus_base")
@@ -252,7 +254,7 @@ def _corpus_at(spark: SparkSession, root: str, ptr: dict) -> DataFrame:
     # hence the _live_epochs guards.
     latest = touched = None
     if any(floor < e <= gen_now for e in _live_epochs(root, "applied")):
-        applied = spark.read.parquet(os.path.join(root, "applied")).filter(
+        applied = read_parquet(spark, os.path.join(root, "applied")).filter(
             (F.col("epoch") > floor) & (F.col("epoch") <= gen_now)
         )
         w = Window.partitionBy(id_col).orderBy(F.col("epoch").desc())
@@ -264,7 +266,7 @@ def _corpus_at(spark: SparkSession, root: str, ptr: dict) -> DataFrame:
         touched = applied.select(id_col)
     if any(floor < e <= gen_now for e in _live_epochs(root, "removed")):
         removed = (
-            spark.read.parquet(os.path.join(root, "removed"))
+            read_parquet(spark, os.path.join(root, "removed"))
             .filter((F.col("epoch") > floor) & (F.col("epoch") <= gen_now))
             .select(id_col, F.col("epoch").alias("__del_gen"))
         )
@@ -329,7 +331,7 @@ def _graph_at(
     eps = [e for e in _live_epochs(root, "graph_delta") if floor < e <= gen]
     if not eps:
         return base
-    d = spark.read.parquet(os.path.join(root, "graph_delta")).filter(
+    d = read_parquet(spark, os.path.join(root, "graph_delta")).filter(
         (F.col("epoch") > floor) & (F.col("epoch") <= gen)
     )
     if len(eps) > 1:
@@ -2110,9 +2112,6 @@ def vacuum_minhash_epochs(root: str) -> int:
     return _minhash_ledger(root).vacuum()
 
 
-_grams_bucket = _id_bucket  # the grams ledger's historical name
-
-
 def _write_grams_epoch(
     grams: DataFrame, root: str, epoch: int, n_buckets: int | None
 ) -> None:
@@ -2127,7 +2126,7 @@ def _write_grams_epoch(
         )
         return
     grams.withColumn(
-        "__bucket", _grams_bucket(F.col("doc"), n_buckets)
+        "__bucket", _id_bucket(F.col("doc"), n_buckets)
     ).write.mode("overwrite").partitionBy("__bucket").parquet(
         _minhash_epoch_path(root, "grams", epoch)
     )
@@ -2270,7 +2269,7 @@ def _probe_pruned(
         buckets = sorted(
             r["b"]
             for r in candidates.select(
-                _grams_bucket(F.col("corpus_doc"), n_buckets).alias("b")
+                _id_bucket(F.col("corpus_doc"), n_buckets).alias("b")
             )
             .distinct()
             .collect()

@@ -46,6 +46,8 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from spacex_data_engineering_pipeline_spark.session import read_parquet
+
 _POINTER = "_index_pointer.json"
 
 
@@ -205,13 +207,13 @@ def ledger_frames(
     frames = []
     if any(lo < e <= epoch for e in live_epochs(root, table)):
         frames.append(
-            spark.read.parquet(os.path.join(root, table))
+            read_parquet(spark, os.path.join(root, table))
             .filter((F.col("epoch") > lo) & (F.col("epoch") <= epoch))
             .withColumn("epoch", F.col("epoch").cast("int"))
         )
     if cu > 0 and os.path.isdir(compact_path(root, table, cu)):
         frames.append(
-            spark.read.parquet(compact_path(root, table, cu)).filter(
+            read_parquet(spark, compact_path(root, table, cu)).filter(
                 F.col("epoch") <= epoch
             )
         )

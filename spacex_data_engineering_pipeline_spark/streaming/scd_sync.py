@@ -54,18 +54,19 @@ from spacex_data_engineering_pipeline_spark.operators.scd import (
     latest_update_per_key,
     scd2_merge,
 )
+from spacex_data_engineering_pipeline_spark.session import read_parquet
 
 
 def read_dimension(spark: SparkSession, dim_path: str) -> DataFrame:
     """The full versioned dimension: live slice ∪ closed history."""
     from pyspark.errors import AnalysisException
 
-    cur = spark.read.parquet(os.path.join(dim_path, "current"))
+    cur = read_parquet(spark, os.path.join(dim_path, "current"))
     closed_root = os.path.join(dim_path, "closed")
     if not os.path.isdir(closed_root):
         return cur
     try:
-        closed = spark.read.parquet(closed_root).drop("batch")
+        closed = read_parquet(spark, closed_root).drop("batch")
     except AnalysisException:
         # every batch=<id> dir is empty (no version ever closed): a
         # schema can't be inferred from zero files
@@ -104,7 +105,7 @@ def run_scd2_sync(
             os.replace(old_path, cur_path)
         exists = os.path.exists(cur_path)
         if exists:
-            current = spark.read.parquet(cur_path)
+            current = read_parquet(spark, cur_path)
             # LATE-UPDATE GUARD — see module docstring. A change at the
             # same instant as the current version is rejected too (two
             # versions with eff_from == eff_to would be an empty
