@@ -8,11 +8,14 @@ rewriting as FEW bytes as possible and swapping them in crash-safely:
 
 - partitioned table: ONE partition-pruned probe finds the affected
   partition values; only those partitions are rewritten (survivor rows),
-  swapped in with the upsert's listing-invisible aside protocol, and
-  partitions left with zero survivors are dropped. Cost is O(affected
-  partitions), never O(table).
-- flat table: whole-table rewrite through the same staged two-rename
-  swap as ``upsert_parquet`` (with its crash-recovery contract).
+  swapped in one ``storage.swap_dir`` each, and partitions left with
+  zero survivors are dropped. Cost is O(affected partitions), never
+  O(table).
+- flat table: whole-table rewrite, staged and swapped in by
+  ``storage.swap_dir`` like ``upsert_parquet``.
+
+Either way ``storage.heal_swaps`` first settles a swap any verb left
+half done, so a crash never loses the rows parked aside.
 
 SQL NULL semantics: DELETE removes rows where the predicate is TRUE;
 rows where it evaluates NULL are KEPT (``DELETE WHERE x > 5`` keeps
@@ -24,18 +27,14 @@ the deleted-row count mirrors what those engines report.
 
 from __future__ import annotations
 
-import os
 import shutil
 
 from pyspark.sql import Column, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from spacex_data_engineering_pipeline_spark.operators.upsert import (
-    _partition_dir_names,
-    _repair_partition_swaps,
-    _swap_in_partitions,
-)
+from spacex_data_engineering_pipeline_spark.operators.upsert import _swap_in_partitions
 from spacex_data_engineering_pipeline_spark.session import read_parquet
+from spacex_data_engineering_pipeline_spark.storage import heal_swaps, swap_dir
 
 
 def delete_where(
@@ -56,15 +55,13 @@ def delete_where(
     expired partitions).
     """
     keep = ~F.coalesce(predicate, F.lit(False))
+    heal_swaps(table_path)
+    existing = read_parquet(spark, table_path)
 
     if partition_col is None:
         # flat path: one pass — observe total+matched riding the
-        # survivor write, then the same swap protocol as upsert_parquet
+        # survivor write, then swap it in
         tmp_path = table_path.rstrip("/") + "__tmp_delete"
-        old_path = table_path.rstrip("/") + "__old_delete"
-        if not os.path.exists(table_path) and os.path.exists(old_path):
-            os.replace(old_path, table_path)  # crash repair, upsert-style
-        existing = read_parquet(spark, table_path)
         obs = Observation()
         deleted_expr = F.sum(
             F.when(F.coalesce(predicate, F.lit(False)), 1).otherwise(0)
@@ -72,15 +69,9 @@ def delete_where(
         existing.observe(obs, deleted_expr).filter(keep).write.mode(
             "overwrite"
         ).parquet(tmp_path)
-        if os.path.exists(old_path):
-            shutil.rmtree(old_path)
-        os.replace(table_path, old_path)
-        os.replace(tmp_path, table_path)
-        shutil.rmtree(old_path)
+        swap_dir(table_path, tmp_path)
         return int(obs.get["deleted"] or 0)
 
-    _repair_partition_swaps(table_path)
-    existing = read_parquet(spark, table_path)
     # Probe: affected partition values + per-partition match counts in
     # ONE partition-prunable job (only partition_col and the predicate's
     # columns are read).
@@ -113,23 +104,10 @@ def delete_where(
         .mode("overwrite")
         .parquet(tmp_path)
     )
-    survivors = _swap_in_partitions(table_path, tmp_path, partition_col)
-    shutil.rmtree(tmp_path, ignore_errors=True)
-    # A partition whose every row matched has no staged dir — drop it.
-    # The on-disk name comes from Spark's own partition-path encoder
-    # (escapePathName + date/timestamp formatting), never an f-string
-    # of the collected value: for a value Spark escapes (':', '=', '%',
-    # spaces) the f-string path doesn't exist and the partition — every
-    # row of which matched the predicate — would silently survive.
-    if len(survivors) < len(affected):
-        affected_dirs = _partition_dir_names(
-            spark,
-            affected,
-            existing.schema[partition_col],
-            table_path.rstrip("/") + "__dirprobe",
-        )
-        for entry in affected_dirs - survivors:
-            shutil.rmtree(os.path.join(table_path, entry), ignore_errors=True)
+    # a partition whose every row matched has no staged dir — dropped
+    _swap_in_partitions(
+        spark, table_path, tmp_path, existing.schema[partition_col], affected
+    )
     return deleted
 
 

@@ -52,6 +52,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from spacex_data_engineering_pipeline_spark.session import read_parquet
+from spacex_data_engineering_pipeline_spark.storage import publish_json
 
 _BUCKET = "__bucket"
 _ROWS = "__rows"
@@ -104,12 +105,9 @@ def _read_pointer(path: str) -> dict:
 
 
 def _commit_pointer(path: str, gen: int, batch_id: int | None) -> None:
-    tmp = os.path.join(path, "._pointer_tmp")
-    with open(tmp, "w") as f:
-        json.dump({"gen": gen, "last_batch_id": batch_id}, f)
-        f.flush()
-        os.fsync(f.fileno())
-    os.replace(tmp, os.path.join(path, _POINTER))
+    publish_json(
+        os.path.join(path, _POINTER), {"gen": gen, "last_batch_id": batch_id}
+    )
 
 
 def _hardlink_tree(src: str, dst: str) -> None:

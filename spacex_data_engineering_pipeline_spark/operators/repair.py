@@ -9,8 +9,8 @@ partition-cardinality table of (partition, n_rows, checksum) — the
 md5-coin DECIMAL(38,0) sum is order-insensitive and engine-portable
 (the `orders_table_checksum` contract), so the copies may live on
 different engines entirely. Only partitions whose (count, checksum)
-pair diverges are rewritten, with the upsert module's staged
-partition swap (crash-safe, listing-invisible staging). Cost:
+pair diverges are rewritten, each staged and swapped in by
+``storage.swap_dir`` (crash-safe, listing-invisible aside). Cost:
 two narrow scans + O(diverged bytes) rewrite, never O(table).
 """
 
@@ -65,19 +65,17 @@ def repair_table(
     canonical: Column,
 ) -> dict:
     """Make the partitioned parquet table at ``target_path`` equal to
-    ``source`` by rewriting ONLY diverged partitions (staged swap from
-    operators/upsert.py — crash-safe, emptied/extra partitions
+    ``source`` by rewriting ONLY diverged partitions (one
+    ``storage.swap_dir`` each — crash-safe, emptied/extra partitions
     dropped). Returns {"diverged": [...], "rewritten": int}.
     """
     from spacex_data_engineering_pipeline_spark.operators.upsert import (
-        _partition_dir_names,
-        _repair_partition_swaps,
         _swap_in_partitions,
     )
-    import os
+    from spacex_data_engineering_pipeline_spark.storage import heal_swaps
     import shutil
 
-    _repair_partition_swaps(target_path)
+    heal_swaps(target_path)
     target = read_parquet(spark, target_path)
     bad = diverged_partitions(source, target, partition_col, canonical)
     if not bad:
@@ -96,18 +94,6 @@ def repair_table(
         .mode("overwrite")
         .parquet(tmp)
     )
-    swapped = _swap_in_partitions(target_path, tmp, partition_col)
-    shutil.rmtree(tmp, ignore_errors=True)
-    # a diverged partition with NO source rows must be dropped from the
-    # target (same dir-name derivation as delete_where: Spark's own
-    # partition-path encoding, never an f-string)
-    if len(swapped) < len(bad):
-        dirs = _partition_dir_names(
-            spark,
-            bad,
-            source.schema[partition_col],
-            target_path.rstrip("/") + "__dirprobe",
-        )
-        for entry in dirs - swapped:
-            shutil.rmtree(os.path.join(target_path, entry), ignore_errors=True)
+    # a diverged partition with NO source rows is dropped from the target
+    _swap_in_partitions(spark, target_path, tmp, source.schema[partition_col], bad)
     return {"diverged": bad, "rewritten": len(bad)}

@@ -24,9 +24,10 @@ parquet loses). This module restores it with one shared pointer:
   cross-table time travel for free.
 
 Scale: the pointer is O(tables) metadata; table bytes are written
-exactly once with normal distributed writes. On an object store the
-rename becomes a conditional PUT — same single-point-of-commit
-contract.
+exactly once with normal distributed writes. The pointer replace
+(``storage.publish_json``) is unconditional: two concurrent committers
+both succeed and the later one silently wins. Compare-and-swap on the
+pointer version is an open ROADMAP item.
 """
 
 from __future__ import annotations
@@ -34,11 +35,11 @@ from __future__ import annotations
 import json
 import os
 import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 
 from spacex_data_engineering_pipeline_spark.session import read_parquet
+from spacex_data_engineering_pipeline_spark.storage import publish_json
 
 _POINTER = "_txn_pointer.json"
 
@@ -60,16 +61,7 @@ def init_txn_root(root: str) -> None:
 
 
 def _commit(root: str, pointer: dict) -> None:
-    fd, tmp = tempfile.mkstemp(dir=root, prefix="._ptr_")
-    try:
-        with os.fdopen(fd, "w") as f:
-            json.dump(pointer, f)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, _pointer_path(root))
-    finally:
-        if os.path.exists(tmp):
-            os.unlink(tmp)
+    publish_json(_pointer_path(root), pointer)
 
 
 def _hardlink_forward(src_dir: str, dst_dir: str) -> None:

@@ -3,9 +3,10 @@
 The reference upserts with one multi-row ``INSERT ... ON CONFLICT
 (launch_id) DO UPDATE`` transaction (src/database.py:133-202). Spark's
 equivalent on plain parquet is read → unionByName → per-key top-1 window
-dedup → atomic swap. With a transactional table format (Delta/Iceberg)
-this whole module collapses to ``MERGE INTO``; the interface here is
-format-agnostic so swapping the implementation doesn't touch callers.
+dedup → a staged write swapped in by ``storage.swap_dir``. With a
+transactional table format (Delta/Iceberg) this whole module collapses
+to ``MERGE INTO``; the interface here is format-agnostic so swapping
+the implementation doesn't touch callers.
 
 Scale notes:
 - the window partitions by the PK: one hash shuffle, AQE-skew-safe;
@@ -27,9 +28,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from spacex_data_engineering_pipeline_spark.session import read_parquet
-
-
-_OLD_PART_PREFIX = "_old_part_"
+from spacex_data_engineering_pipeline_spark.storage import heal_swaps, swap_dir
 
 
 def _partition_dir_names(
@@ -63,46 +62,30 @@ def _partition_dir_names(
     return names
 
 
-def _repair_partition_swaps(table_path: str) -> None:
-    """Restore partition dirs parked aside by a crash inside the swap
-    window below — runs before any partitioned read of the table."""
-    from spacex_data_engineering_pipeline_spark.operators.compact import _decode_base
-
-    try:
-        entries = os.listdir(table_path)
-    except FileNotFoundError:
-        return
-    for e in entries:
-        if not e.startswith(_OLD_PART_PREFIX):
-            continue
-        original = os.path.join(table_path, _decode_base(e[len(_OLD_PART_PREFIX):]))
-        aside = os.path.join(table_path, e)
-        if os.path.exists(original):
-            shutil.rmtree(aside, ignore_errors=True)  # crash after swap-in
-        else:
-            os.replace(aside, original)  # crash between the two renames
-
-
-def _swap_in_partitions(table_path: str, tmp_path: str, partition_col: str) -> set[str]:
-    """Move every staged ``partition_col=...`` dir from ``tmp_path``
-    into the table via rename-aside → rename-in → drop-aside; returns
-    the set of partition dir names that received data. Aside names are
-    underscore-prefixed and ``=``-free so a concurrent Spark listing
-    ignores them."""
-    from spacex_data_engineering_pipeline_spark.operators.compact import _encode_base
-
-    survivors: set[str] = set()
+def _swap_in_partitions(
+    spark: SparkSession, table_path: str, tmp_path: str, field, affected: list
+) -> None:
+    """Move every staged ``<field>=...`` dir from ``tmp_path`` into the
+    table (one ``storage.swap_dir`` each), then drop the ``affected``
+    partitions the staged write left with no rows — their stale rows
+    would survive otherwise. Commit is per partition: a crash mid-loop
+    leaves a prefix of partitions updated, the guarantee dynamic
+    partition overwrite gives; cross-partition atomicity needs a
+    transactional table format."""
+    survivors = set()
     for entry in os.listdir(tmp_path):
-        if not entry.startswith(f"{partition_col}="):
-            continue  # _SUCCESS and friends
-        survivors.add(entry)
-        dest = os.path.join(table_path, entry)
-        aside = os.path.join(table_path, _OLD_PART_PREFIX + _encode_base(entry))
-        if os.path.exists(dest):
-            os.replace(dest, aside)
-        os.replace(os.path.join(tmp_path, entry), dest)
-        shutil.rmtree(aside, ignore_errors=True)
-    return survivors
+        if entry.startswith(f"{field.name}="):  # not _SUCCESS and friends
+            survivors.add(entry)
+            swap_dir(os.path.join(table_path, entry), os.path.join(tmp_path, entry))
+    shutil.rmtree(tmp_path, ignore_errors=True)
+    # Dir names come from Spark's own encoder (never an f-string of the
+    # value — see _partition_dir_names), and only when a drop is pending.
+    if len(survivors) < len(affected):
+        affected_dirs = _partition_dir_names(
+            spark, affected, field, table_path.rstrip("/") + "__dirprobe"
+        )
+        for entry in affected_dirs - survivors:
+            shutil.rmtree(os.path.join(table_path, entry), ignore_errors=True)
 
 
 def merge_dedup(
@@ -171,13 +154,11 @@ def upsert_parquet(
     incoming plan executes only once, inside the write.
     """
     tmp_path = table_path.rstrip("/") + "__tmp_upsert"
-    old_path = table_path.rstrip("/") + "__old_upsert"
-    # Crash recovery: a previous run that died inside the two-rename
-    # window below leaves the table parked at __old_upsert with nothing
-    # at table_path. Restore it FIRST — otherwise this run would treat
-    # the upsert as an initial load and silently orphan every prior row.
-    if not os.path.exists(table_path) and os.path.exists(old_path):
-        os.replace(old_path, table_path)
+    # Crash recovery: a verb that died inside a swap of this table left
+    # it parked aside with nothing at table_path. Restore it FIRST —
+    # otherwise this run would treat the upsert as an initial load and
+    # silently orphan every prior row.
+    heal_swaps(table_path)
 
     exists = os.path.exists(table_path)
     existing = read_parquet(spark, table_path) if exists else None
@@ -193,20 +174,12 @@ def upsert_parquet(
     merged = merge_dedup(existing, incoming, key, order_by, evolve_schema)
 
     # Break lineage from the path we're about to replace: write to a
-    # sibling tmp dir, then swap — rename old ASIDE, rename new IN.
-    # Between those two renames there IS an instant with no table at
-    # table_path; a crash there is repaired by the recovery above, so
-    # some complete table (old or new) is always reachable. (On a real
-    # deployment: Delta MERGE, or saveAsTable + dynamic partition
-    # overwrite.)
+    # sibling tmp dir, then ``storage.swap_dir`` it in — a crash inside
+    # the swap is repaired by the recovery above, so some complete table
+    # (old or new) is always reachable. (On a real deployment: Delta
+    # MERGE, or saveAsTable + dynamic partition overwrite.)
     merged.write.mode("overwrite").parquet(tmp_path)
-    if exists:
-        if os.path.exists(old_path):
-            shutil.rmtree(old_path)
-        os.replace(table_path, old_path)
-    os.replace(tmp_path, table_path)
-    if exists:
-        shutil.rmtree(old_path)
+    swap_dir(table_path, tmp_path)
     return inserted
 
 
@@ -238,10 +211,10 @@ def upsert_parquet_partitioned(
 
     Crash-safety: dynamic partition overwrite commits per partition —
     a crash mid-write can leave a subset of affected partitions updated
-    (each partition is itself replaced atomically). Cross-partition
-    atomicity needs a transactional format (Delta/Iceberg MERGE);
-    callers for whom that matters use ``upsert_parquet``'s whole-table
-    swap instead.
+    (each partition is itself replaced by ``storage.swap_dir``).
+    Cross-partition atomicity needs a transactional format
+    (Delta/Iceberg MERGE); callers for whom that matters use
+    ``upsert_parquet``'s whole-table swap instead.
 
     Probe cost: the pre-write probes only touch ``key`` and
     ``partition_col``. When ``incoming`` is an expensive plan (e.g. an
@@ -263,7 +236,7 @@ def upsert_parquet_partitioned(
     """
     # heal any crash-parked partition aside BEFORE reading the table —
     # a missing partition would silently vanish from the merge input
-    _repair_partition_swaps(table_path)
+    heal_swaps(table_path)
     # an existing-but-empty dir (mkdir'd by an orchestrator, or a crash
     # before the first commit) is "no table yet", not an unreadable one
     exists = os.path.exists(table_path) and any(
@@ -332,32 +305,12 @@ def upsert_parquet_partitioned(
         F.col(partition_col)
     ).write.partitionBy(partition_col).mode("overwrite").parquet(tmp_path)
 
-    # Partition-dir swap: rename aside → move in → drop old, so no
-    # instant leaves a partition missing. Commit is per partition (a
-    # crash mid-loop leaves a prefix of partitions updated) — the same
-    # guarantee dynamic overwrite gives; cross-partition atomicity needs
-    # a transactional table format. Asides are `_`-prefixed with `=`
-    # percent-encoded (compact.py's scheme): Spark's listing keeps
-    # `_x=y` names as partition candidates, so a plain `dir__old`
-    # sibling would surface in a concurrent read as a phantom partition
-    # value and widen the column type to string.
-    survivors = _swap_in_partitions(table_path, tmp_path, partition_col)
-    shutil.rmtree(tmp_path, ignore_errors=True)
-
-    # A partition whose every row moved away ends with zero surviving
-    # rows; the staged write produced no directory for it, so drop its
-    # directory or the stale rows survive. Dir names come from Spark's
-    # own encoder (never an f-string of the value — see
-    # _partition_dir_names), and only when a drop is actually pending.
-    if len(survivors) < len(affected):
-        affected_dirs = _partition_dir_names(
-            spark,
-            affected,
-            existing.schema[partition_col],
-            table_path.rstrip("/") + "__dirprobe",
-        )
-        for entry in affected_dirs - survivors:
-            shutil.rmtree(os.path.join(table_path, entry), ignore_errors=True)
+    # Partition-dir swap (storage.swap_dir per partition), so no instant
+    # leaves a partition missing. A partition whose every row moved away
+    # has no staged dir; its directory is dropped.
+    _swap_in_partitions(
+        spark, table_path, tmp_path, existing.schema[partition_col], affected
+    )
     return inserted
 
 

@@ -85,15 +85,12 @@ def run_streaming_ingestion(
 
     def table_is_flat() -> bool:
         # Heal crash-parked partition asides FIRST: a crash inside the
-        # partitioned swap can leave every launch_year= dir renamed to
-        # _old_part_*, which would misread as a flat layout here — the
-        # flat route skips the partitioned upsert whose entry repair
-        # would otherwise heal it, so the aside would never be restored.
-        from spacex_data_engineering_pipeline_spark.operators.upsert import (
-            _repair_partition_swaps,
-        )
+        # partitioned swap can leave every launch_year= dir parked
+        # aside, which would misread as a flat layout here and send a
+        # partitioned table down the flat whole-table upsert.
+        from spacex_data_engineering_pipeline_spark.storage import heal_swaps
 
-        _repair_partition_swaps(launches_path)
+        heal_swaps(launches_path)
         try:
             entries = os.listdir(launches_path)
         except FileNotFoundError:

@@ -36,6 +36,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from spacex_data_engineering_pipeline_spark.storage import publish_json
+
 
 def _load_ledger(path: str) -> dict[int, int]:
     try:
@@ -46,10 +48,7 @@ def _load_ledger(path: str) -> dict[int, int]:
 
 
 def _store_ledger(path: str, ledger: dict[int, int]) -> None:
-    tmp = path + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump({str(k): v for k, v in ledger.items()}, f)
-    os.replace(tmp, path)
+    publish_json(path, {str(k): v for k, v in ledger.items()})
 
 
 def run_late_split(

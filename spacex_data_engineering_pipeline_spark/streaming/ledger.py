@@ -41,12 +41,12 @@ from __future__ import annotations
 import json
 import os
 import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from spacex_data_engineering_pipeline_spark.session import read_parquet
+from spacex_data_engineering_pipeline_spark.storage import publish_json
 
 _POINTER = "_index_pointer.json"
 
@@ -61,18 +61,10 @@ def read_index_pointer(root: str) -> dict:
 
 
 def flip_pointer(root: str, pointer: dict) -> None:
-    # same single-commit-point contract as operators/txn.py::_commit:
-    # stage, fsync, one atomic replace (conditional PUT on object stores)
-    fd, tmp = tempfile.mkstemp(dir=root, prefix="._ptr_")
-    try:
-        with os.fdopen(fd, "w") as f:
-            json.dump(pointer, f)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, pointer_path(root))
-    finally:
-        if os.path.exists(tmp):
-            os.unlink(tmp)
+    # the single commit point (storage.publish_json). The replace is
+    # unconditional — a writer holding a stale pointer overwrites a
+    # newer commit; compare-and-swap is an open ROADMAP item.
+    publish_json(pointer_path(root), pointer)
 
 
 def resolve_as_of(ptr: dict, key: str, as_of) -> int:
@@ -132,7 +124,7 @@ def record_epoch_pair(
     committed together.
 
     The record file is a tiny JSON list rewritten atomically
-    (stage → fsync → replace, the pointer-flip discipline — O(pairs)
+    (``storage.publish_json``, the pointer-flip discipline — O(pairs)
     bytes, one per drain cycle, trivially small next to the ledgers).
     Returns the appended record ``{"pair_id": n, "epochs":
     {name: head, ...}}``."""
@@ -145,17 +137,7 @@ def record_epoch_pair(
         },
     }
     pairs.append(rec)
-    d = os.path.dirname(os.path.abspath(path)) or "."
-    fd, tmp = tempfile.mkstemp(dir=d, prefix="._pairs_")
-    try:
-        with os.fdopen(fd, "w") as f:
-            json.dump(pairs, f)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, path)
-    finally:
-        if os.path.exists(tmp):
-            os.unlink(tmp)
+    publish_json(path, pairs)
     return rec
 
 
@@ -235,7 +217,7 @@ LEDGER_TABLES = frozenset(
     {
         "grams", "bands", "pairs", "deletes",  # minhash dedup
         "postings",                             # IVF / semantic / graph-IVF
-        "df", "stats", "doclog",                # BM25
+        "stats", "doclog",                      # BM25
         "moments",                              # PCA
         "applied", "removed",                   # plain graph roots' logs
         "graph_delta",                          # graph delta generations

@@ -6,8 +6,8 @@ dimension-history operator instead of the PK upsert).
 Storage layout — history is APPEND-ONLY, current is a small swap:
 
     <dim_path>/current/           one row per key (the live slice);
-                                  rewritten per batch via the two-rename
-                                  crash swap (repair on entry)
+                                  rewritten per batch, swapped in by
+                                  storage.swap_dir (healed on entry)
     <dim_path>/closed/batch=<id>/ versions closed BY that micro-batch;
                                   written once with overwrite, never
                                   touched again
@@ -45,7 +45,6 @@ checkpoint (or an identical source layout) so ids keep their meaning.
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -55,6 +54,7 @@ from spacex_data_engineering_pipeline_spark.operators.scd import (
     scd2_merge,
 )
 from spacex_data_engineering_pipeline_spark.session import read_parquet
+from spacex_data_engineering_pipeline_spark.storage import heal_swaps, swap_dir
 
 
 def read_dimension(spark: SparkSession, dim_path: str) -> DataFrame:
@@ -92,7 +92,6 @@ def run_scd2_sync(
     cur_path = os.path.join(dim_path, "current")
     closed_root = os.path.join(dim_path, "closed")
     tmp_path = cur_path + "__tmp_scd"
-    old_path = cur_path + "__old_scd"
     ts_type = updates_stream.schema[ts_col].dataType
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -101,8 +100,7 @@ def run_scd2_sync(
         collapsed = latest_update_per_key(batch_df, key_cols, ts_col)
 
         # crash inside a previous swap parked the slice aside: restore
-        if not os.path.exists(cur_path) and os.path.exists(old_path):
-            os.replace(old_path, cur_path)
+        heal_swaps(cur_path)
         exists = os.path.exists(cur_path)
         if exists:
             current = read_parquet(spark, cur_path)
@@ -185,10 +183,7 @@ def run_scd2_sync(
             merged.unpersist()
         finally:
             collapsed.unpersist()
-        if exists:
-            os.replace(cur_path, old_path)
-        os.replace(tmp_path, cur_path)
-        shutil.rmtree(old_path, ignore_errors=True)
+        swap_dir(cur_path, tmp_path)
 
     q = (
         updates_stream.writeStream.foreachBatch(apply_batch)

@@ -5,6 +5,7 @@ exchanges, compaction to the target file count.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from spacex_data_engineering_pipeline_spark import storage
@@ -797,3 +798,196 @@ def test_repair_drops_partition_missing_from_source(spark, tmp_path):
     got = {tuple(r) for r in spark.read.parquet(dst_path).select("year", "k", "name").collect()}
     want = {tuple(r) for r in spark.read.parquet(src_path).select("year", "k", "name").collect()}
     assert got == want
+
+
+# ---------------------------------------------------------------------------
+# one directory swap, one heal, one pointer publish (storage.py)
+# ---------------------------------------------------------------------------
+
+
+def _fragmented(spark, path, rows, ddl, partition_col=None):
+    """Write ``rows`` as four appends of one file each, so every leaf
+    holds four files and ``compact_parquet`` rewrites it."""
+    for i in range(4):
+        w = spark.createDataFrame(rows[i::4], ddl).coalesce(1).write.mode("append")
+        if partition_col:
+            w = w.partitionBy(partition_col)
+        w.parquet(path)
+
+
+def _crash_inside_swap(monkeypatch, verb):
+    """Run ``verb`` with ``os.replace`` failing on its 2nd call — the
+    rename-in right after a swap's rename-aside — and return the path
+    the 1st call parked the live directory at."""
+    import os
+
+    import pytest
+
+    real, targets = os.replace, []
+
+    def crashing(src, dst):
+        targets.append(dst)
+        if len(targets) == 2:
+            raise OSError("injected crash between the swap's renames")
+        return real(src, dst)
+
+    with monkeypatch.context() as m:
+        m.setattr(os, "replace", crashing)
+        with pytest.raises(OSError, match="injected crash"):
+            verb()
+    assert os.path.isdir(targets[0]), "the crash must leave a dir parked aside"
+    return targets[0]
+
+
+_FLAT_ROWS = [(i, f"v{i}") for i in range(1, 9)]
+_PART_ROWS = [(i, f"v{i}", 2000 if i <= 8 else 2001) for i in range(1, 13)]
+_NEW_FLAT = [(100, "new")]
+_NEW_PART = [(100, "new", 2000)]  # lands in the crashed leaf's partition
+
+
+def _flat_verbs(spark, path):
+    from spacex_data_engineering_pipeline_spark.operators.compact import compact_parquet
+    from spacex_data_engineering_pipeline_spark.operators.delete import delete_where
+    from spacex_data_engineering_pipeline_spark.operators.upsert import upsert_parquet
+
+    def upsert():
+        batch = spark.createDataFrame(_NEW_FLAT, "id long, v string")
+        upsert_parquet(spark, path, batch, "id", [F.col("v")])
+
+    return {
+        # (run, rows it removes from / adds to the table)
+        "upsert": (upsert, set(), set(_NEW_FLAT)),
+        "delete": (lambda: delete_where(spark, path, F.col("id") == 1), {_FLAT_ROWS[0]}, set()),
+        "compact": (lambda: compact_parquet(spark, path, target_file_bytes=1 << 30), set(), set()),
+    }
+
+
+def _partitioned_verbs(spark, path):
+    from spacex_data_engineering_pipeline_spark.operators.compact import compact_parquet
+    from spacex_data_engineering_pipeline_spark.operators.upsert import (
+        upsert_parquet_partitioned,
+    )
+
+    def upsert():
+        batch = spark.createDataFrame(_NEW_PART, "id long, v string, yr int")
+        upsert_parquet_partitioned(spark, path, batch, "id", [F.col("v")], "yr")
+
+    return {
+        "upsert_partitioned": (upsert, set(), set(_NEW_PART)),
+        "compact": (lambda: compact_parquet(spark, path, target_file_bytes=1 << 30), set(), set()),
+    }
+
+
+@pytest.mark.parametrize(
+    "layout,crashed,then",
+    [
+        ("flat", "delete", "upsert"),
+        ("flat", "compact", "upsert"),
+        ("flat", "upsert", "delete"),
+        ("partitioned", "compact", "upsert_partitioned"),
+        ("partitioned", "upsert_partitioned", "compact"),
+    ],
+)
+def test_swap_crash_is_healed_by_a_different_verb(
+    spark, tmp_path, monkeypatch, layout, crashed, then
+):
+    """A crash inside one verb's directory swap parks the live dir
+    aside. The NEXT verb — whichever it is — must put it back before it
+    reads, or it takes the table (or leaf) for missing and makes the
+    loss permanent: every pre-crash row must survive and no aside may
+    remain."""
+    import os
+
+    path = str(tmp_path / "tbl")
+    if layout == "flat":
+        rows, cols = _FLAT_ROWS, ["id", "v"]
+        _fragmented(spark, path, rows, "id long, v string")
+        verbs = _flat_verbs(spark, path)
+    else:
+        rows, cols = _PART_ROWS, ["id", "v", "yr"]
+        _fragmented(spark, path, rows, "id long, v string, yr int", "yr")
+        verbs = _partitioned_verbs(spark, path)
+
+    aside = _crash_inside_swap(monkeypatch, verbs[crashed][0])
+    run, removed, added = verbs[then]
+    run()
+    got = {tuple(r) for r in spark.read.parquet(path).select(*cols).collect()}
+    assert got == (set(rows) - removed) | added
+    assert not os.path.exists(aside)
+
+
+@pytest.mark.parametrize("writer", ["ledger", "txn", "matview", "late_data"])
+def test_failed_pointer_publish_keeps_old_pointer_and_leaves_no_debris(
+    tmp_path, writer
+):
+    """A pointer write that fails mid-dump (here: an unserialisable
+    value) must raise, leave the committed pointer byte-identical and
+    leave no temporary file beside it."""
+    import os
+
+    from spacex_data_engineering_pipeline_spark.operators import matview, txn
+    from spacex_data_engineering_pipeline_spark.streaming import late_data, ledger
+
+    d = str(tmp_path)
+    bad = object()
+    ledger_json = os.path.join(d, "ledger.json")
+    good, broken = {
+        "ledger": (
+            lambda: ledger.flip_pointer(d, {"max_epoch": 0}),
+            lambda: ledger.flip_pointer(d, {"max_epoch": bad}),
+        ),
+        "txn": (
+            lambda: txn.init_txn_root(d),
+            lambda: txn._commit(d, {"version": 1, "tables": bad}),
+        ),
+        "matview": (
+            lambda: matview._commit_pointer(d, 0, None),
+            lambda: matview._commit_pointer(d, 1, bad),
+        ),
+        "late_data": (
+            lambda: late_data._store_ledger(ledger_json, {0: 5}),
+            lambda: late_data._store_ledger(ledger_json, {0: 5, 1: bad}),
+        ),
+    }[writer]
+    good()
+    before = {f: open(os.path.join(d, f), "rb").read() for f in os.listdir(d)}
+    with pytest.raises(TypeError):
+        broken()
+    after = {f: open(os.path.join(d, f), "rb").read() for f in os.listdir(d)}
+    assert after == before
+
+
+def test_only_storage_fsyncs_or_names_a_swap_aside():
+    """Pointer publishes (``os.fsync``) and swap asides (``_old_``-style
+    names) belong to ``storage.py`` alone: a second hand-rolled copy is
+    how one verb came to heal only its own aside and lose another
+    verb's parked rows."""
+    import ast
+    import os
+    import re
+
+    import spacex_data_engineering_pipeline_spark as pkg
+
+    aside = re.compile(r"(?<![A-Za-z0-9])_old_")
+    root = os.path.dirname(pkg.__file__)
+    offenders = []
+    for dirpath, _, files in os.walk(root):
+        for name in files:
+            path = os.path.join(dirpath, name)
+            if not name.endswith(".py") or path == storage.__file__:
+                continue
+            with open(path) as f:
+                tree = ast.parse(f.read(), path)
+            for node in ast.walk(tree):
+                fn = getattr(node, "func", None)
+                if (
+                    isinstance(node, ast.Call)
+                    and isinstance(fn, ast.Attribute)
+                    and fn.attr == "fsync"
+                ) or (
+                    isinstance(node, ast.Constant)
+                    and isinstance(node.value, str)
+                    and aside.search(node.value)
+                ):
+                    offenders.append(f"{os.path.relpath(path, root)}:{node.lineno}")
+    assert offenders == []
